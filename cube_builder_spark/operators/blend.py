@@ -147,44 +147,6 @@ def observation_counts(pixels: DataFrame, quality_nodata: int = 0,
     )
 
 
-def blend_all(pixels: DataFrame, efficacy: DataFrame | None = None,
-              order_key=None, clear_values=None,
-              not_clear_values=None, nodata: int = BAND_NODATA,
-              keys: tuple[str, ...] = ("tile_id", "pixel_id")) -> DataFrame:
-    """C2–C6 in ONE grouped pass: LCF picks (value/provenance/
-    datasource), exact MED, TOTALOB and CLEAROB all come out of the
-    same (keys)-partitioned aggregation — one shuffle for the whole
-    blend family."""
-    if order_key is None:
-        if efficacy is None:
-            efficacy = scene_efficacy(pixels, clear_values, not_clear_values)
-        pixels = pixels.join(
-            F.broadcast(efficacy.select("tile_id", "date", "efficacy")),
-            ["tile_id", "date"])
-        order_key = default_order_key()
-    is_clear = F.col("quality").isin(*(clear_values or CLEAR_VALUES))
-    is_valid = F.col("value") != nodata
-    return (
-        pixels.groupBy(*keys)
-        .agg(
-            _pick(is_clear, order_key).alias("c"),
-            _pick(is_valid, order_key).alias("v"),
-            F.median(F.when(is_clear, F.col("value")).cast("double")).alias("med_raw"),
-            F.sum((F.col("quality") != 0).cast("long")).alias("totalob"),
-            F.sum(is_clear.cast("long")).alias("clearob"),
-        )
-        .select(
-            *keys,
-            F.coalesce("c.p.value", "v.p.value", F.lit(nodata)).alias("lcf_value"),
-            F.coalesce("c.p.doy", "v.p.doy", F.lit(-1)).cast("long").alias("provenance"),
-            F.coalesce("c.p.source_idx", "v.p.source_idx", F.lit(255))
-            .cast("long").alias("datasource"),
-            F.coalesce(F.col("med_raw"), F.lit(float(nodata))).alias("med_value"),
-            "totalob", "clearob",
-        )
-    )
-
-
 def blend_medoid(pixels: DataFrame, band2=None, clear_values=None,
                  nodata: int = BAND_NODATA,
                  keys: tuple[str, ...] = ("tile_id", "pixel_id")) -> DataFrame:

@@ -487,12 +487,15 @@ def d_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Unrolled min-label propagation steps (l1..l6): both engines run the
 # SAME fixed number of rounds, so the output is deterministic and
 # hash-comparable even on a not-yet-converged component (it isn't one:
-# near-dup clusters have diameter 2-3).
+# near-dup clusters have diameter 2-3). Every step is ``AS
+# MATERIALIZED`` (the kcore/MMR oracle discipline): l{i} references
+# l{i-1} twice, so DuckDB's default CTE inlining would expand l{n} into
+# 2^n copies of the whole pair pipeline under it.
 def _label_steps_sql(n: int) -> str:
     steps = []
     for i in range(1, n + 1):
         steps.append(f"""
-l{i} AS (
+l{i} AS MATERIALIZED (
   SELECT n.doc_id, least(n.lbl, min(l.lbl)) AS lbl
   FROM l{i - 1} n
   JOIN edges e ON e.s = n.doc_id

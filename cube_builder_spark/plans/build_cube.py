@@ -108,8 +108,19 @@ def assign_periods(obs: DataFrame, periods: DataFrame) -> DataFrame:
         & (F.col("date") <= F.col("period_end")))
 
 
-def merge_stage(obs: DataFrame, cfg: CubeJobConfig,
-                share: bool = True) -> DataFrame:
+def scene_observations(pixels: DataFrame) -> DataFrame:
+    """Decoded or warped pixel rows (tile_id, pixel_id, band, date,
+    value) → the observation columns ``build_cube`` takes. Every
+    scene is its own source (source_idx 0, scene_order 0)."""
+    return (pixels
+            .withColumn("doy", F.dayofyear("date").cast("long"))
+            .withColumn("source_idx", F.lit(0))
+            .withColumn("scene_order", F.lit(0))
+            .select("tile_id", "pixel_id", "band", "date", "doy",
+                    "value", "source_idx", "scene_order"))
+
+
+def merge_stage(obs: DataFrame, cfg: CubeJobConfig) -> DataFrame:
     """C1 mosaic: first-valid-wins across overlapping scenes of one
     (tile, band, date) slot. Input columns: tile_id, pixel_id, band,
     date, period, value, source_idx, scene_order.
@@ -118,27 +129,16 @@ def merge_stage(obs: DataFrame, cfg: CubeJobConfig,
     (tile_id, pixel_id) satisfies the mosaic groupBy, the blend
     stage's spectral x quality join, AND the final blend groupBy
     (each clusters on a superset), so this is the only full-data
-    shuffle between raw observations and the finished cube."""
+    shuffle between raw observations and the finished cube. The count
+    is pinned so AQE cannot coalesce a small batch to one partition."""
     n = int(obs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     merged = mosaic.mosaic_first_valid(
         obs.repartition(n, "tile_id", "pixel_id"),
         keys=("tile_id", "pixel_id", "band", "date", "period", "doy"))
-    out = merged.select(
+    return merged.select(
         "tile_id", "pixel_id", "band", "date", "period", "doy",
         F.col("merge_value").alias("value"),
         F.col("datasource").alias("source_idx"))
-    # Close the stage with an Exchange on the chain keys: the blend
-    # stage consumes this frame from three branches (quality filter,
-    # spectral filter, efficacy agg). Branches share work only at an
-    # Exchange boundary (AQE stage reuse) — without this one they
-    # branch above the mosaic aggregation and recompute it per branch
-    # (the agg itself has no Exchange: it reuses the input clustering).
-    # Same hash keys, so everything downstream still chains
-    # shuffle-free. Measured at sf0.1: blend cold 5.3s -> 2.1s with no
-    # persist/cache involved. Callers that immediately materialize the
-    # merge (identity write, persist) pass share=False — the exchange
-    # would be dead weight in front of their own repartition.
-    return out.repartition(n, "tile_id", "pixel_id") if share else out
 
 
 def histogram_stage(merged: DataFrame, cfg: CubeJobConfig) -> DataFrame:
@@ -191,44 +191,79 @@ def histogram_stage(merged: DataFrame, cfg: CubeJobConfig) -> DataFrame:
     return untouched.unionByName(replaced).unionByName(qual_rows)
 
 
-def blend_stage(merged: DataFrame, cfg: CubeJobConfig) -> DataFrame:
-    """C2–C6 per (tile, period, band, pixel): join the quality band
-    back onto every spectral band (the reference reads the quality
-    raster alongside each band blend, processing.py:744-758), then one
-    keyed blend pass.
+STATE_KEYS = ("tile_id", "period", "band", "pixel_id")
+
+
+def blend_state(merged: DataFrame, cfg: CubeJobConfig) -> DataFrame:
+    """C2–C6 per (tile, period, band, pixel), stopped at the mergeable
+    aggregates: join the quality band back onto every spectral band
+    (the reference reads the quality raster alongside each band blend,
+    processing.py:744-758), then one keyed groupBy.
+
+    Every column is a monoid, so states of disjoint scene sets fold
+    with ``streaming.incremental.merge_blend_state``:
+    - ``c`` / ``v``: LCF picks, max(struct(order_key, payload)) over
+      clear / valid rows (merge = max)
+    - ``clear_vals``: sorted clear values for the exact MED (merge =
+      concat + sort); bounded by scenes per period
+    - ``totalob`` / ``clearob``: counters (merge = sum)
 
     No persist here: the quality/spectral branches both sit above the
-    merge stage's single repartition Exchange, so within one plan
-    Spark's ReuseExchange computes the merge once and replays the
-    shuffle output for the second branch. Callers that EXECUTE multiple
-    actions over the merge plane (build_cube) own persist/unpersist at
-    the job boundary instead — a persist taken here could never be
-    released (the stage returns a lazy frame) and leaks across a long
-    session (the round-2/3 cache-leak defect)."""
+    merge stage's repartition Exchange, so ReuseExchange computes the
+    merge once within one plan. Callers that EXECUTE multiple actions
+    over the merge plane (build_cube) own persist/unpersist at the job
+    boundary — a persist taken here could never be released (the stage
+    returns a lazy frame) and would leak across a long session."""
     qual = (merged.filter(F.col("band") == cfg.quality_band)
             .select("tile_id", "pixel_id", "date", "period",
                     F.col("value").alias("quality")))
     spectral = merged.filter(F.col("band") != cfg.quality_band)
     joined = spectral.join(qual, ["tile_id", "pixel_id", "date", "period"])
 
-    keys = ("tile_id", "period", "band", "pixel_id")
     if cfg.reference_day is not None:
-        out = blend.blend_all(
-            joined, order_key=blend.temporal_priority_key(cfg.reference_day),
-            nodata=cfg.nodata, keys=keys)
+        order_key = blend.temporal_priority_key(cfg.reference_day)
     else:
         eff = blend.scene_efficacy(qual)
-        with_eff = joined.join(
+        joined = joined.join(
             F.broadcast(eff.select("tile_id", "date", "efficacy")),
             ["tile_id", "date"])
-        out = blend.blend_all(with_eff, order_key=blend.default_order_key(),
-                              nodata=cfg.nodata, keys=keys)
-    value = F.col("lcf_value") if cfg.composite == "LCF" else \
-        F.col("med_value").cast("long")
-    return out.select(
-        *keys, value.alias("value"),
-        "lcf_value", "med_value", "provenance", "datasource",
+        order_key = blend.default_order_key()
+
+    is_clear = F.col("quality").isin(*CLEAR_VALUES)
+    is_valid = F.col("value") != cfg.nodata
+    return (joined.groupBy(*STATE_KEYS).agg(
+        blend._pick(is_clear, order_key).alias("c"),
+        blend._pick(is_valid, order_key).alias("v"),
+        F.sort_array(F.collect_list(F.when(is_clear, F.col("value"))))
+        .alias("clear_vals"),
+        F.sum((F.col("quality") != 0).cast("long")).alias("totalob"),
+        F.sum(is_clear.cast("long")).alias("clearob")))
+
+
+def finalize_blend(state: DataFrame, cfg: CubeJobConfig) -> DataFrame:
+    """Blend state → the cube rows (value/lcf/med/provenance/
+    datasource/counts). Median is the exact interpolating median of
+    the sorted clear-value array — bit-identical to F.median /
+    numpy.ma.median on the same values."""
+    n = F.size("clear_vals")
+    lo = F.element_at("clear_vals", ((n + 1) / 2).cast("int")).cast("double")
+    hi = F.element_at("clear_vals", (n / 2 + 1).cast("int")).cast("double")
+    med = F.coalesce(F.when(n > 0, (lo + hi) / 2.0), F.lit(float(cfg.nodata)))
+    lcf = F.coalesce("c.p.value", "v.p.value", F.lit(cfg.nodata))
+    value = lcf if cfg.composite == "LCF" else med.cast("long")
+    return state.select(
+        *STATE_KEYS, value.alias("value"),
+        lcf.alias("lcf_value"),
+        med.alias("med_value"),
+        F.coalesce("c.p.doy", "v.p.doy", F.lit(-1)).cast("long").alias("provenance"),
+        F.coalesce("c.p.source_idx", "v.p.source_idx", F.lit(255))
+        .cast("long").alias("datasource"),
         "totalob", "clearob")
+
+
+def blend_stage(merged: DataFrame, cfg: CubeJobConfig) -> DataFrame:
+    """The finished blend of one batch of mosaicked observations."""
+    return finalize_blend(blend_state(merged, cfg), cfg)
 
 
 def index_stage(blended: DataFrame, cfg: CubeJobConfig) -> DataFrame:
@@ -260,15 +295,20 @@ def index_stage(blended: DataFrame, cfg: CubeJobConfig) -> DataFrame:
     return blended.unionByName(rows)
 
 
-def publish_stage(merged: DataFrame, cfg: CubeJobConfig) -> DataFrame:
-    """K4 items: one row per (tile, period) with cloud cover from the
-    quality band over the whole period."""
+def item_state(merged: DataFrame, cfg: CubeJobConfig) -> DataFrame:
+    """K4 cloud-cover counters per (tile, period) from the quality
+    band — a monoid, so incremental refreshes sum them."""
     qual = merged.filter(F.col("band") == cfg.quality_band)
-    qa = qual.groupBy("tile_id", "period").agg(
+    return qual.groupBy("tile_id", "period").agg(
         F.sum(F.col("value").isin(*CLEAR_VALUES).cast("long")).alias("clear"),
         F.sum((~F.col("value").isin(*CLEAR_VALUES) & (F.col("value") != 0)
                & (F.col("value") != cfg.nodata)).cast("long")).alias("not_clear"))
-    return qa.select(
+
+
+def finalize_items(items: DataFrame, cfg: CubeJobConfig) -> DataFrame:
+    """Item counters → one published row per (tile, period): item id
+    and cloud cover over the whole period."""
+    return items.select(
         F.concat(F.lit(f"{cfg.cube}_V{cfg.version:03d}_"),
                  F.format_string("%03d", F.col("tile_id").cast("int")),
                  F.lit("_"), F.regexp_replace(F.split("period", "_")[0], "-", "")
@@ -277,6 +317,11 @@ def publish_stage(merged: DataFrame, cfg: CubeJobConfig) -> DataFrame:
         (F.col("not_clear") * 100.0
          / F.nullif(F.col("clear") + F.col("not_clear"), F.lit(0))
          ).alias("cloud_cover"))
+
+
+def publish_stage(merged: DataFrame, cfg: CubeJobConfig) -> DataFrame:
+    """K4 items of one batch of mosaicked observations."""
+    return finalize_items(item_state(merged, cfg), cfg)
 
 
 def read_reused_identity(spark: SparkSession, cfg: CubeJobConfig,
@@ -359,7 +404,7 @@ def build_cube(spark: SparkSession, obs: DataFrame, out_dir: str,
             tagged = tagged.join(
                 F.broadcast(done.select("tile_id", "period").distinct()),
                 ["tile_id", "period"], "left_anti")
-        merged = merge_stage(tagged, cfg, share=not write_identity)
+        merged = merge_stage(tagged, cfg)
         if write_identity:
             from ..streaming.incremental import upsert_partitioned
             upsert_partitioned(merged, os.path.join(out_dir, "identity"))

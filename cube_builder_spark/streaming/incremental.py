@@ -5,9 +5,9 @@ the dispatcher re-queues that (tile, period) work unit and the whole
 merge→blend→publish chain re-runs from the raw files
 (``maestro.py:439-628`` re-dispatch + ``tasks.py:128-182`` reuse).
 
-Spark-first shape: the blend family (operators/blend.py) is, by
-construction, a single keyed aggregation — and every one of its
-aggregates is a *mergeable monoid*:
+Spark-first shape: the batch build's blend
+(``plans.build_cube.blend_state``) is, by construction, a single keyed
+aggregation — and every one of its aggregates is a *mergeable monoid*:
 
 - LCF pick = max(struct(order_key, payload))   → merge = max
 - TOTALOB / CLEAROB = sums                     → merge = sum
@@ -33,8 +33,7 @@ matters (the reference has the same constraint at task granularity).
 Scale notes: state and cube are partitioned by (tile_id, period), so
 a batch touching k units rewrites exactly k partitions (partition
 pruning on read, dynamic overwrite on write); the only wide exchange
-per batch is the one groupBy on the work-unit key, identical in shape
-to the batch blend. On a real cluster the state table would be
+per batch is the batch blend's own groupBy on the work-unit key. On a real cluster the state table would be
 Delta/Iceberg for atomic partition swaps; plain parquet + dynamic
 overwrite keeps the engine dependency-free here.
 """
@@ -46,60 +45,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import blend
-from ..operators.mosaic import mosaic_first_valid
-from ..pixelplane import BAND_NODATA, CLEAR_VALUES
-from ..plans.build_cube import (CubeJobConfig, assign_periods, index_stage,
-                                periods_df)
-
-STATE_KEYS = ("tile_id", "period", "band", "pixel_id")
-
-
-def mosaic_batch(obs: DataFrame, cfg: CubeJobConfig) -> DataFrame:
-    """C1 within the batch: first-valid-wins across overlapping scenes
-    of one (tile, band, date) slot — same as build_cube.merge_stage."""
-    # one shuffle keys the batch's whole mosaic->join->state chain
-    # (hash(tile, pixel) ⊆ every downstream wide key); pinned count so
-    # AQE can't collapse the batch to one partition
-    n = int(obs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    merged = mosaic_first_valid(
-        obs.repartition(n, "tile_id", "pixel_id"),
-        keys=("tile_id", "pixel_id", "band", "date", "period", "doy"))
-    return merged.select(
-        "tile_id", "pixel_id", "band", "date", "period", "doy",
-        F.col("merge_value").alias("value"),
-        F.col("datasource").alias("source_idx"))
-
-
-def delta_blend_state(merged: DataFrame, cfg: CubeJobConfig) -> DataFrame:
-    """One micro-batch of mosaicked observations → partial blend state
-    per (tile, period, band, pixel). Mirrors
-    plans.build_cube.blend_stage, but stops at the mergeable
-    aggregates instead of finalizing."""
-    qual = (merged.filter(F.col("band") == cfg.quality_band)
-            .select("tile_id", "pixel_id", "date", "period",
-                    F.col("value").alias("quality")))
-    spectral = merged.filter(F.col("band") != cfg.quality_band)
-    joined = spectral.join(qual, ["tile_id", "pixel_id", "date", "period"])
-
-    if cfg.reference_day is not None:
-        order_key = blend.temporal_priority_key(cfg.reference_day)
-    else:
-        eff = blend.scene_efficacy(qual)
-        joined = joined.join(
-            F.broadcast(eff.select("tile_id", "date", "efficacy")),
-            ["tile_id", "date"])
-        order_key = blend.default_order_key()
-
-    is_clear = F.col("quality").isin(*CLEAR_VALUES)
-    is_valid = F.col("value") != cfg.nodata
-    return (joined.groupBy(*STATE_KEYS).agg(
-        blend._pick(is_clear, order_key).alias("c"),
-        blend._pick(is_valid, order_key).alias("v"),
-        F.sort_array(F.collect_list(F.when(is_clear, F.col("value"))))
-        .alias("clear_vals"),
-        F.sum((F.col("quality") != 0).cast("long")).alias("totalob"),
-        F.sum(is_clear.cast("long")).alias("clearob")))
+from ..plans.build_cube import (STATE_KEYS, CubeJobConfig, assign_periods,
+                                finalize_blend, index_stage, periods_df)
+# A micro-batch runs the batch build's own stages, under the names the
+# fold uses: one mosaic, one blend state and one item-counter
+# implementation serve both paths.
+from ..plans.build_cube import blend_state as delta_blend_state
+from ..plans.build_cube import finalize_items as _finalize_items
+from ..plans.build_cube import item_state as delta_item_state
+from ..plans.build_cube import merge_stage as mosaic_batch
 
 
 def merge_blend_state(old: DataFrame, delta: DataFrame) -> DataFrame:
@@ -112,55 +66,6 @@ def merge_blend_state(old: DataFrame, delta: DataFrame) -> DataFrame:
         F.sort_array(F.flatten(F.collect_list("clear_vals"))).alias("clear_vals"),
         F.sum("totalob").alias("totalob"),
         F.sum("clearob").alias("clearob")))
-
-
-def finalize_blend(state: DataFrame, cfg: CubeJobConfig) -> DataFrame:
-    """State → the blend_stage output contract (lcf/med/provenance/
-    datasource/counts). Median is the exact interpolating median of
-    the sorted clear-value array — bit-identical to F.median /
-    numpy.ma.median on the same values."""
-    n = F.size("clear_vals")
-    lo = F.element_at("clear_vals", ((n + 1) / 2).cast("int")).cast("double")
-    hi = F.element_at("clear_vals", (n / 2 + 1).cast("int")).cast("double")
-    med = F.when(n > 0, (lo + hi) / 2.0)
-    value = F.coalesce("c.p.value", "v.p.value", F.lit(cfg.nodata))
-    out = state.select(
-        *STATE_KEYS,
-        value.alias("lcf_value"),
-        F.coalesce("c.p.doy", "v.p.doy", F.lit(-1)).cast("long").alias("provenance"),
-        F.coalesce("c.p.source_idx", "v.p.source_idx", F.lit(255))
-        .cast("long").alias("datasource"),
-        F.coalesce(med, F.lit(float(cfg.nodata))).alias("med_value"),
-        "totalob", "clearob")
-    comp = F.col("lcf_value") if cfg.composite == "LCF" else \
-        F.col("med_value").cast("long")
-    return out.select(
-        *STATE_KEYS, comp.alias("value"),
-        "lcf_value", "med_value", "provenance", "datasource",
-        "totalob", "clearob")
-
-
-def delta_item_state(merged: DataFrame, cfg: CubeJobConfig) -> DataFrame:
-    """K4 cloud-cover counters per (tile, period) — also a monoid.
-    Computed from the mosaicked frame, same as build_cube's
-    publish_stage."""
-    qual = merged.filter(F.col("band") == cfg.quality_band)
-    return qual.groupBy("tile_id", "period").agg(
-        F.sum(F.col("value").isin(*CLEAR_VALUES).cast("long")).alias("clear"),
-        F.sum((~F.col("value").isin(*CLEAR_VALUES) & (F.col("value") != 0)
-               & (F.col("value") != cfg.nodata)).cast("long")).alias("not_clear"))
-
-
-def _finalize_items(item_state: DataFrame, cfg: CubeJobConfig) -> DataFrame:
-    return item_state.select(
-        F.concat(F.lit(f"{cfg.cube}_V{cfg.version:03d}_"),
-                 F.format_string("%03d", F.col("tile_id").cast("int")),
-                 F.lit("_"), F.regexp_replace(F.split("period", "_")[0], "-", "")
-                 ).alias("item_id"),
-        "tile_id", "period",
-        (F.col("not_clear") * 100.0
-         / F.nullif(F.col("clear") + F.col("not_clear"), F.lit(0))
-         ).alias("cloud_cover"))
 
 
 def _read_partitions(spark: SparkSession, path: str,

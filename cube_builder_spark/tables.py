@@ -44,8 +44,9 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
 
     Fidelity guard: the pandas path maps a float NaN to NULL (pandas
     has no NaN/missing distinction), so rows containing a real NaN
-    fall back to the exact list path. Empty inputs also fall back
-    (nothing to embed; cost is irrelevant)."""
+    (also inside a list, tuple or dict) fall back to the exact list
+    path. Empty inputs also fall back (nothing to embed; cost is
+    irrelevant)."""
     rows = list(rows)
 
     def _has_nan(v) -> bool:
@@ -53,13 +54,21 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
             return v != v
         if isinstance(v, (list, tuple)):
             return any(_has_nan(x) for x in v)
+        if isinstance(v, dict):
+            return any(_has_nan(x) for x in v.values())
         return False
 
     if rows and not any(_has_nan(r) for r in rows):
         try:
             import pandas as pd
+            columns = None
+            if isinstance(rows[0], dict):
+                # the Arrow path maps columns by POSITION: lay dict rows
+                # out in the schema's field order, not the keys' order
+                from pyspark.sql.types import _parse_datatype_string
+                columns = _parse_datatype_string(schema).names
             return spark.createDataFrame(
-                pd.DataFrame.from_records(rows), schema=schema)
+                pd.DataFrame.from_records(rows, columns=columns), schema=schema)
         except Exception:
             pass  # fall through to the exact original path
     return spark.createDataFrame(rows, schema)

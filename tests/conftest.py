@@ -9,6 +9,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
+# The suite's inputs are megabytes. Without a cap the session JVM takes
+# get_spark's production default (-Xmx48g), and G1 grows the committed
+# heap to ~13 GB within minutes of a run; 4 GB keeps the suite's speed
+# with a third of the memory. The CLI tests' child JVMs inherit it.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
+
 
 @pytest.fixture(scope="session")
 def spark():

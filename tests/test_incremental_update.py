@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from cube_builder_spark.plans.build_cube import CubeJobConfig, build_cube
@@ -31,18 +32,28 @@ def _split_by_date(obs):
             obs.filter(F.col("date") > F.lit(cut)))
 
 
-def test_two_batches_equal_one_shot(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize("cfg", [
+    CubeJobConfig(),
+    CubeJobConfig(composite="MED", index_bands={}),
+    CubeJobConfig(reference_day=9, index_bands={}),
+], ids=["lcf", "med", "reference_day"])
+def test_two_batches_equal_one_shot(spark, sf_dir, tmp_path, cfg):
+    """Folding two batches through the blend state gives the one-shot
+    cube for every fold: LCF picks by efficacy, MED medians (array
+    concat) and the temporal-priority pick key."""
     obs = synth_observations(spark, sf_dir)
-    cfg = CubeJobConfig()
 
     batch_out = str(tmp_path / "oneshot")
-    build_cube(spark, obs, batch_out, cfg)
+    one_shot = build_cube(spark, obs, batch_out, cfg)
 
     incr_out = str(tmp_path / "incr")
     b1, b2 = _split_by_date(obs)
     r1 = update_cube_batch(spark, b1, incr_out, cfg)
     r2 = update_cube_batch(spark, b2, incr_out, cfg)
     assert r1["updated_units"] > 0 and r2["updated_units"] > 0
+    # some (tile, period) units take scenes from both batches: their
+    # state is really merged, not just written twice
+    assert r1["updated_units"] + r2["updated_units"] > one_shot["new_items"]
 
     got = _cube_rows(spark, os.path.join(incr_out, "cube"))
     want = _cube_rows(spark, os.path.join(batch_out, "cube"))

@@ -53,3 +53,17 @@ def test_local_df_empty(spark):
     df = local_df(spark, [], "a long, b string")
     assert df.collect() == []
     assert [f.name for f in df.schema.fields] == ["a", "b"]
+
+
+def test_local_df_dict_rows_map_by_name(spark):
+    """Dict rows bind to schema fields by key, not by key order."""
+    rows = [{"b": 2.0, "a": 1.0}, {"a": 3.0, "b": 4.0}]
+    schema = "a double, b double"
+    got = local_df(spark, rows, schema)
+    assert got.collect() == spark.createDataFrame(rows, schema).collect()
+    assert [(r.a, r.b) for r in got.collect()] == [(1.0, 2.0), (3.0, 4.0)]
+
+
+def test_local_df_dict_nan_falls_back(spark):
+    got = local_df(spark, [{"a": float("nan")}], "a double").collect()
+    assert got[0].a is not None and got[0].a != got[0].a

@@ -54,14 +54,9 @@ def build_from_directory(spark, scenes_dir: str, out_dir: str, cfg,
             .select("path", "content", "band", "tile_id", "date_s"),
             extra_cols=["band", "tile_id", "date_s"])
         pixels = pixels.withColumn("tile_id", F.col("tile_id").cast("long"))
-    obs = (pixels
-           .withColumn("date", F.col("date_s").cast("date"))
-           .withColumn("doy", F.dayofyear("date").cast("long"))
-           .withColumn("source_idx", F.lit(0))
-           .withColumn("scene_order", F.lit(0))
-           .select("tile_id", "pixel_id", "band", "date", "doy",
-                   "value", "source_idx", "scene_order"))
-    from cube_builder_spark.plans.build_cube import build_cube
+    from cube_builder_spark.plans.build_cube import build_cube, scene_observations
+    obs = scene_observations(
+        pixels.withColumn("date", F.col("date_s").cast("date")))
     return build_cube(spark, obs, out_dir, cfg)
 
 

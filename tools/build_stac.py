@@ -56,7 +56,7 @@ def build_from_stac(spark, out_dir: str, cfg, stac_url: str,
     build_local."""
     from pyspark.sql import functions as F
 
-    from cube_builder_spark.plans.build_cube import build_cube
+    from cube_builder_spark.plans.build_cube import build_cube, scene_observations
     from cube_builder_spark.sources.stac import (StacClient,
                                                  fetch_asset_content,
                                                  fetch_asset_pixels,
@@ -108,13 +108,7 @@ def build_from_stac(spark, out_dir: str, cfg, stac_url: str,
         pixels = (fetch_asset_pixels(assets)
                   .withColumn("date", F.col("date").cast("date"))
                   .withColumn("tile_id", F.col("tile_id").cast("long")))
-    obs = (pixels
-           .withColumn("doy", F.dayofyear("date").cast("long"))
-           .withColumn("source_idx", F.lit(0))
-           .withColumn("scene_order", F.lit(0))
-           .select("tile_id", "pixel_id", "band", "date", "doy",
-                   "value", "source_idx", "scene_order"))
-    return build_cube(spark, obs, out_dir, cfg)
+    return build_cube(spark, scene_observations(pixels), out_dir, cfg)
 
 
 def main(argv=None):
